@@ -9,11 +9,12 @@ gate. Column names/aliases are kept identical on both sides.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from p2_mapreduce_spark.session import load_table
+from p2_mapreduce_spark.session import load_table, memo_get
 from p2_mapreduce_spark.operators import text as text_ops
 
 # Shared tokenizer regex — same semantics in Java regex (Spark) and RE2
@@ -30,29 +31,33 @@ def entry(spark: SparkSession) -> DataFrame:
 
 # --- queries ---------------------------------------------------------------
 
-#: Shared-stage memo for the dedup-closure family (VERDICT r03 item 5):
-#: dup_clusters / dup_clusters_star / golden_record / dup_matrix all
-#: consume the SAME exact n-gram-Jaccard pair list (and three of them the
-#: same label table).  Each stage localCheckpoints on first use — an
-#: RDD-level materialization the harness's per-query
-#: ``catalog.clearCache()`` does not drop — so the family performs ONE
-#: candidate generation per (application, sf_dir) instead of four.  This
-#: is the production composition too: a curation pipeline computes the
-#: pair list once and fans it out to closure, survivorship, and the
-#: provenance matrix.
+#: Shared-stage memo.  A shared stage is an intermediate that several
+#: queries consume unchanged — the equivalent of the reference running
+#: map → shuffle → reduce once and reading the intermediates back.  Each
+#: ``@_shared_stage`` function builds it on first use per
+#: (application, sf_dir) and ``localCheckpoint()``s it: an RDD-level
+#: materialization the harness's per-query ``catalog.clearCache()`` does
+#: not drop, so every consumer reads one materialization.  Keys are
+#: (applicationId, sf_dir, stage name); a build under a new scope evicts
+#: the old scope's entries (``session.memo_get``).
 _DEDUP_STAGE_MEMO: dict = {}
 
 
-def _memo_scope(spark: SparkSession, sf_dir: str) -> None:
-    """Bound the memo to ONE (application, sf_dir) scope: switching the
-    application or the scale factor drops every old entry, so the
-    checkpoint blocks of a dead scope become unreferenced and Spark's
-    ContextCleaner reclaims them instead of accumulating for the
-    process lifetime (ADVICE r04)."""
-    scope = (spark.sparkContext.applicationId, sf_dir)
-    stale = [k for k in _DEDUP_STAGE_MEMO if k[:2] != scope]
-    for k in stale:
-        del _DEDUP_STAGE_MEMO[k]
+def _shared_stage(build):
+    """Memoize ``build(spark, sf_dir)`` as the shared stage named after
+    the function (``_shared_<name>`` → ``<name>``)."""
+    name = build.__name__.removeprefix("_shared_")
+
+    @functools.wraps(build)
+    def stage(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return memo_get(
+            _DEDUP_STAGE_MEMO,
+            (spark.sparkContext.applicationId, sf_dir),
+            (name,),
+            lambda: build(spark, sf_dir).localCheckpoint(),
+        )
+
+    return stage
 
 
 #: Plan-level memo (r10, guide §4 — the driver-side py4j boundary):
@@ -74,14 +79,12 @@ def _attach_plan(spark: SparkSession, sf_dir: str, attach) -> DataFrame:
     """Memoized media ATTACH stage — the payload builders are the
     heaviest expression trees in the repo and several queries share one
     attach table (attach_bmp feeds 4 query ids)."""
-    key = (spark.sparkContext.applicationId, sf_dir, attach.__name__)
-    hit = _PLAN_MEMO.get(key)
-    if hit is None:
-        for k in [k for k in _PLAN_MEMO if k[0] != key[0]]:
-            del _PLAN_MEMO[k]  # dead application: drop its plans
-        hit = attach(load_table(spark, sf_dir, "documents"))
-        _PLAN_MEMO[key] = hit
-    return hit
+    return memo_get(
+        _PLAN_MEMO,
+        (spark.sparkContext.applicationId,),
+        (sf_dir, attach.__name__),
+        lambda: attach(load_table(spark, sf_dir, "documents")),
+    )
 
 
 def _plan_memoized(name: str, build):
@@ -90,13 +93,12 @@ def _plan_memoized(name: str, build):
     purity audit."""
 
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        key = (spark.sparkContext.applicationId, sf_dir, "q:" + name)
-        hit = _PLAN_MEMO.get(key)
-        if hit is None:
-            for k in [k for k in _PLAN_MEMO if k[0] != key[0]]:
-                del _PLAN_MEMO[k]
-            hit = build(spark, sf_dir)
-            _PLAN_MEMO[key] = hit
+        hit = memo_get(
+            _PLAN_MEMO,
+            (spark.sparkContext.applicationId,),
+            (sf_dir, "q:" + name),
+            lambda: build(spark, sf_dir),
+        )
         # Hand each caller a fresh one-node wrapper (a single py4j call),
         # NOT the shared object: a DataFrame's JVM QueryExecution caches
         # its physical plan at first explain, so sharing the object would
@@ -231,258 +233,208 @@ _PLAN_PURE_IDS: frozenset = frozenset((
 ))
 
 
+#: The exact AllPairs stage is built once at the family's loosest
+#: threshold; the LSH honesty gate reads its ``jaccard >= gate`` slice,
+#: which equals a solo build at the gate only when build ≤ gate.
+ALLPAIRS_STAGE_THRESHOLD = 0.45
+LSH_GATE_THRESHOLD = 0.5
+assert ALLPAIRS_STAGE_THRESHOLD <= LSH_GATE_THRESHOLD
+
+
+@_shared_stage
 def _shared_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized (doc, h) hashed-shingle table (dedup.hashed_shingles,
-    n=3) — the corpus explode every shingle-set dedup path opens with:
-    the exact pair stage (dedup_ngram / the closure family's truth),
-    the AllPairs prefix join, the MinHash-LSH index, and the LSH-recall
-    gate's two pipelines all consume the identical table, so the
-    tokenize+shingle+hash explode runs once per suite instead of five
-    times.  Values bit-identical (the table IS each operator's first
-    intermediate); at 100 TB this is the standard composition — one
-    shingle materialization feeding every index the pipeline builds."""
-    _memo_scope(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "shingles")
-    if key not in _DEDUP_STAGE_MEMO:
-        from p2_mapreduce_spark.operators.dedup import hashed_shingles
+    """(doc, h) hashed-shingle table (dedup.hashed_shingles, n=3) — the
+    corpus explode every shingle-set dedup path opens with: the exact
+    pair stage, the AllPairs prefix join, the MinHash-LSH index, the
+    containment miner and the novelty attribution all consume the
+    identical table.  Values bit-identical (the table IS each operator's
+    first intermediate)."""
+    from p2_mapreduce_spark.operators.dedup import hashed_shingles
 
-        _DEDUP_STAGE_MEMO[key] = hashed_shingles(
-            load_table(spark, sf_dir, "documents"), 3
-        ).localCheckpoint()
-    return _DEDUP_STAGE_MEMO[key]
+    return hashed_shingles(load_table(spark, sf_dir, "documents"), 3)
 
 
+@_shared_stage
 def _shared_minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized MinHash-LSH band table (doc, band, band_hash) over the
-    whole corpus at the family defaults (64 hashes × 16 bands), derived
-    from the shared shingle stage: dedup_minhash consumes it whole and
-    dedup_incremental slices it per ingest side (band hashes are pure
-    per-doc functions, so the slice equals a per-side rebuild) — the
-    64-min signature aggregate runs once per suite instead of three
-    times.  This mirrors save_lsh_index: the band table IS the
-    write-once index artifact."""
-    _memo_scope(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "minhash_bands")
-    if key not in _DEDUP_STAGE_MEMO:
-        from pyspark.sql import functions as F
+    """MinHash-LSH band table (doc, band, band_hash) over the whole
+    corpus at the family defaults (64 hashes × 16 bands), derived from
+    the shared shingle stage: dedup_minhash and lsh_recall consume it
+    whole and dedup_incremental slices it per ingest side (band hashes
+    are pure per-doc functions, so the slice equals a per-side rebuild).
+    This mirrors save_lsh_index: the band table IS the write-once index
+    artifact."""
+    from pyspark.sql import functions as F
 
-        from p2_mapreduce_spark.operators.dedup import (
-            NUM_BANDS,
-            NUM_HASHES,
-            _band_hash_from_sig,
-            _minhash_sig_array,
-        )
+    from p2_mapreduce_spark.operators.dedup import (
+        NUM_BANDS,
+        NUM_HASHES,
+        _band_hash_from_sig,
+        _minhash_sig_array,
+    )
 
-        hs = _shared_shingles(spark, sf_dir)
-        per_doc = hs.groupBy("doc").agg(
-            _minhash_sig_array(NUM_HASHES).alias("mh")
-        )
-        bands = per_doc.select(
-            "doc",
-            F.posexplode(
-                _band_hash_from_sig(NUM_BANDS, NUM_HASHES // NUM_BANDS)
-            ).alias("band", "band_hash"),
-        )
-        _DEDUP_STAGE_MEMO[key] = bands.localCheckpoint()
-    return _DEDUP_STAGE_MEMO[key]
+    per_doc = _shared_shingles(spark, sf_dir).groupBy("doc").agg(
+        _minhash_sig_array(NUM_HASHES).alias("mh")
+    )
+    return per_doc.select(
+        "doc",
+        F.posexplode(
+            _band_hash_from_sig(NUM_BANDS, NUM_HASHES // NUM_BANDS)
+        ).alias("band", "band_hash"),
+    )
 
 
+@_shared_stage
 def _shared_simhash_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized md5-60 SimHash fingerprint table (doc, simhash) over
-    the corpus — the tokenize+hash+64-vote aggregate that both the
-    near-pair finder (dedup_simhash) and the blocking-quality audit
-    (blocking_quality) open with; one materialization per suite, same
-    shared-stage discipline as the shingle table.  At 100 TB the
-    fingerprint table IS the stored dedup index artifact — computing
-    it once and grading blocking against the same table is the
-    production composition."""
-    _memo_scope(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "simhash_fps")
-    if key not in _DEDUP_STAGE_MEMO:
-        from p2_mapreduce_spark.operators.dedup import simhash_fingerprints
+    """md5-60 SimHash fingerprint table (doc, simhash) — the
+    tokenize+hash+64-vote aggregate that both the near-pair finder
+    (dedup_simhash) and the blocking-quality audit (blocking_quality)
+    open with.  At 100 TB the fingerprint table IS the stored dedup
+    index artifact."""
+    from p2_mapreduce_spark.operators.dedup import simhash_fingerprints
 
-        _DEDUP_STAGE_MEMO[key] = simhash_fingerprints(
-            load_table(spark, sf_dir, "documents"), hash_fn="md5"
-        ).localCheckpoint()
-    return _DEDUP_STAGE_MEMO[key]
+    return simhash_fingerprints(
+        load_table(spark, sf_dir, "documents"), hash_fn="md5"
+    )
 
 
+@_shared_stage
 def _shared_raw_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized UNFILTERED shingle_pairs table (r10): the exact Jaccard
-    miner and the containment miner run the identical inverted-index
-    self-join over the shared shingles and differ only in the final
-    predicate — one 1.1M-row materialization serves both."""
-    _memo_scope(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "raw_pairs")
-    if key not in _DEDUP_STAGE_MEMO:
-        from p2_mapreduce_spark.operators.dedup import shingle_pairs
+    """UNFILTERED shingle_pairs table: the exact Jaccard miner and the
+    containment miner run the identical inverted-index self-join over
+    the shared shingles and differ only in the final predicate."""
+    from p2_mapreduce_spark.operators.dedup import shingle_pairs
 
-        _DEDUP_STAGE_MEMO[key] = shingle_pairs(
-            load_table(spark, sf_dir, "documents"),
-            shingles=_shared_shingles(spark, sf_dir),
-        ).localCheckpoint()
-    return _DEDUP_STAGE_MEMO[key]
+    return shingle_pairs(
+        load_table(spark, sf_dir, "documents"),
+        shingles=_shared_shingles(spark, sf_dir),
+    )
 
 
+@_shared_stage
 def _shared_ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _memo_scope(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "pairs")
-    if key not in _DEDUP_STAGE_MEMO:
-        from p2_mapreduce_spark.operators.dedup import ngram_jaccard_pairs
+    """Exact n-gram-Jaccard pair list at 0.5: dedup_ngram surfaces it,
+    the closure family (dup_clusters / golden_record / dup_matrix / …)
+    and blocking_quality's truth side consume it."""
+    from p2_mapreduce_spark.operators.dedup import ngram_jaccard_pairs
 
-        pairs = ngram_jaccard_pairs(
-            load_table(spark, sf_dir, "documents"),
-            threshold=0.5,
-            raw_pairs=_shared_raw_pairs(spark, sf_dir),
-        )
-        _DEDUP_STAGE_MEMO[key] = pairs.localCheckpoint()
-    return _DEDUP_STAGE_MEMO[key]
+    return ngram_jaccard_pairs(
+        load_table(spark, sf_dir, "documents"),
+        threshold=0.5,
+        raw_pairs=_shared_raw_pairs(spark, sf_dir),
+    )
 
 
+@_shared_stage
 def _shared_winnow_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized winnowing fingerprint selection (doc_id, pos, fp) at the
-    family defaults (k=3, w=4): the MOSS selection face surfaces it
-    whole, the MOSS pair face self-joins its distinct (doc_id, fp)
-    projection — one in-row selection pass per suite instead of two.
-    The selection is a pure per-doc function, so the shared table equals
+    """Winnowing fingerprint selection (doc_id, pos, fp) at the family
+    defaults (k=3, w=4): the MOSS selection face surfaces it whole, the
+    MOSS pair face self-joins its distinct (doc_id, fp) projection.  The
+    selection is a pure per-doc function, so the shared table equals
     each consumer's solo derivation (parity pytest)."""
-    _memo_scope(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "winnow_fps")
-    if key not in _DEDUP_STAGE_MEMO:
-        from p2_mapreduce_spark.operators.dedup import winnow_fingerprints
+    from p2_mapreduce_spark.operators.dedup import winnow_fingerprints
 
-        _DEDUP_STAGE_MEMO[key] = winnow_fingerprints(
-            load_table(spark, sf_dir, "documents")
-        ).localCheckpoint()
-    return _DEDUP_STAGE_MEMO[key]
+    return winnow_fingerprints(load_table(spark, sf_dir, "documents"))
 
 
+@_shared_stage
 def _shared_allpairs_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized EXACT AllPairs/PPJoin pair table at the family's loosest
-    threshold (0.45, dedup_allpairs' contract) over the shared shingle
-    stage.  The exact pair set at any tighter threshold t is the slice
-    ``jaccard >= t`` of this table (same integer counts, same IEEE
-    division), so the LSH honesty gate's exact side reads the one
-    materialization instead of re-running the prefix join."""
-    _memo_scope(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "allpairs")
-    if key not in _DEDUP_STAGE_MEMO:
-        from p2_mapreduce_spark.operators.dedup import allpairs_jaccard
+    """EXACT AllPairs/PPJoin pair table at ALLPAIRS_STAGE_THRESHOLD
+    (dedup_allpairs' contract) over the shared shingle stage.  The exact
+    pair set at any tighter threshold t is the slice ``jaccard >= t`` of
+    this table (same integer counts, same IEEE division), so the LSH
+    honesty gate's exact side reads this materialization."""
+    from p2_mapreduce_spark.operators.dedup import allpairs_jaccard
 
-        pairs = allpairs_jaccard(
-            load_table(spark, sf_dir, "documents"),
-            threshold=0.45,
-            shingles=_shared_shingles(spark, sf_dir),
-        )
-        _DEDUP_STAGE_MEMO[key] = pairs.localCheckpoint()
-    return _DEDUP_STAGE_MEMO[key]
+    return allpairs_jaccard(
+        load_table(spark, sf_dir, "documents"),
+        threshold=ALLPAIRS_STAGE_THRESHOLD,
+        shingles=_shared_shingles(spark, sf_dir),
+    )
 
 
+@_shared_stage
 def _shared_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _memo_scope(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "clusters")
-    if key not in _DEDUP_STAGE_MEMO:
-        from p2_mapreduce_spark.operators.graph import dup_clusters
+    """Connected-component labels over the shared n-gram pair list."""
+    from p2_mapreduce_spark.operators.graph import dup_clusters
 
-        comp = dup_clusters(
-            _shared_ngram_pairs(spark, sf_dir).select("doc_a", "doc_b")
-        )
-        _DEDUP_STAGE_MEMO[key] = comp.localCheckpoint()
-    return _DEDUP_STAGE_MEMO[key]
+    return dup_clusters(
+        _shared_ngram_pairs(spark, sf_dir).select("doc_a", "doc_b")
+    )
 
 
+@_shared_stage
 def _shared_link_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized panel-filtered (s, c) incidence stage of the
-    link-prediction family (VERDICT r06 item 5): link_prediction and
-    link_jaccard consumed IDENTICAL upstream stages but each rebuilt
-    it — one execution per suite run now, same localCheckpoint
-    discipline as the dedup-closure memo above."""
-    _memo_scope(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "link_pairs")
-    if key not in _DEDUP_STAGE_MEMO:
-        from p2_mapreduce_spark.operators.graph import supplier_panel_pairs
+    """Panel-filtered (s, c) incidence stage of the link-prediction
+    family (link_prediction, link_jaccard)."""
+    from p2_mapreduce_spark.operators.graph import supplier_panel_pairs
 
-        pairs = supplier_panel_pairs(
-            load_table(spark, sf_dir, "lineitem"),
-            load_table(spark, sf_dir, "orders"),
-        )
-        _DEDUP_STAGE_MEMO[key] = pairs.localCheckpoint()
-    return _DEDUP_STAGE_MEMO[key]
+    return supplier_panel_pairs(
+        load_table(spark, sf_dir, "lineitem"),
+        load_table(spark, sf_dir, "orders"),
+    )
 
 
+@_shared_stage
 def _shared_link_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized (cust_a, cust_b, n_common) wedge-count stage over the
-    shared panel incidence (r10): the common-neighbor ranking and the
-    Jaccard ranking consume the IDENTICAL ~8M-pair aggregate — one
-    wedge expansion + pair count per suite run instead of two."""
-    _memo_scope(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "link_scored")
-    if key not in _DEDUP_STAGE_MEMO:
-        from p2_mapreduce_spark.operators.graph import _panel_wedge_counts
+    """(cust_a, cust_b, n_common) wedge-count stage over the shared
+    panel incidence: the common-neighbor ranking and the Jaccard ranking
+    consume the IDENTICAL ~8M-pair aggregate."""
+    from p2_mapreduce_spark.operators.graph import _panel_wedge_counts
 
-        _DEDUP_STAGE_MEMO[key] = _panel_wedge_counts(
-            _shared_link_pairs(spark, sf_dir)
-        ).localCheckpoint()
-    return _DEDUP_STAGE_MEMO[key]
+    return _panel_wedge_counts(_shared_link_pairs(spark, sf_dir))
 
 
+@_shared_stage
 def _shared_trade_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized distinct (cust, supp, w) trading-pair dictionary of the
+    """Distinct (cust, supp, w) trading-pair dictionary of the
     trade-graph family (graph.trade_pairs, weighted): pagerank_trade /
     bfs_trade / sssp_trade / ppr_trade / hits_trade / degree_assort /
     rich_club / graph_modularity / reciprocity and the two_hop reach
-    stage all derive their edges from this ONE order-line join — one
-    execution per suite run instead of ten, same localCheckpoint
-    discipline as the dedup-closure memo.  Unweighted consumers project
-    (cust, supp); sssp keeps ``w`` (min ship lag).  This is the
-    production composition: a graph-analytics pipeline materializes the
-    edge dictionary once and fans out every centrality/shape report."""
-    _memo_scope(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "trade_pairs")
-    if key not in _DEDUP_STAGE_MEMO:
-        from p2_mapreduce_spark.operators.graph import trade_pairs
+    stage all derive their edges from this ONE order-line join.
+    Unweighted consumers project (cust, supp); sssp keeps ``w`` (min
+    ship lag)."""
+    from p2_mapreduce_spark.operators.graph import trade_pairs
 
-        pairs = trade_pairs(
-            load_table(spark, sf_dir, "lineitem"),
-            load_table(spark, sf_dir, "orders"),
-            weighted=True,
-        )
-        _DEDUP_STAGE_MEMO[key] = pairs.localCheckpoint()
-    return _DEDUP_STAGE_MEMO[key]
+    return trade_pairs(
+        load_table(spark, sf_dir, "lineitem"),
+        load_table(spark, sf_dir, "orders"),
+        weighted=True,
+    )
 
 
+@_shared_stage
+def _shared_trade_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two-hop reach stage over the trade graph: ``two_hop`` surfaces it
+    as-is and ``harmonic`` derives H₂ from the same counts."""
+    from p2_mapreduce_spark.operators.graph import trade_two_hop
+
+    return trade_two_hop(
+        load_table(spark, sf_dir, "lineitem"),
+        load_table(spark, sf_dir, "orders"),
+        pairs=_shared_trade_pairs(spark, sf_dir).select("cust", "supp"),
+    )
+
+
+@_shared_stage
 def _shared_cosupply_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized distinct supplier co-supply edge dictionary
+    """Distinct supplier co-supply edge dictionary
     (graph.cosupply_pairs): triangle_census / triangle_doulion / k_core
     all dedup their edges anyway (the DOULION coin commutes with the
     dedup — graph.py documents the proof), so the quadratic-in-basket
-    pair expansion runs once per suite instead of three times, values
-    bit-identical."""
-    _memo_scope(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "cosupply_pairs")
-    if key not in _DEDUP_STAGE_MEMO:
-        from p2_mapreduce_spark.operators.graph import cosupply_pairs
+    pair expansion runs once, values bit-identical."""
+    from p2_mapreduce_spark.operators.graph import cosupply_pairs
 
-        _DEDUP_STAGE_MEMO[key] = cosupply_pairs(
-            load_table(spark, sf_dir, "lineitem")
-        ).localCheckpoint()
-    return _DEDUP_STAGE_MEMO[key]
+    return cosupply_pairs(load_table(spark, sf_dir, "lineitem"))
 
 
+@_shared_stage
 def _shared_basket_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized distinct (l_orderkey, l_partkey) basket membership table
+    """Distinct (l_orderkey, l_partkey) basket membership table
     (analytics.basket_items): copurchase / item_cosine / assoc_rules /
-    clustering_coeff all open with the identical fact-grain distinct —
-    one execution per suite run, values bit-identical."""
-    _memo_scope(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "basket_items")
-    if key not in _DEDUP_STAGE_MEMO:
-        from p2_mapreduce_spark.operators.analytics import basket_items
+    clustering_coeff all open with the identical fact-grain distinct."""
+    from p2_mapreduce_spark.operators.analytics import basket_items
 
-        _DEDUP_STAGE_MEMO[key] = basket_items(
-            load_table(spark, sf_dir, "lineitem")
-        ).localCheckpoint()
-    return _DEDUP_STAGE_MEMO[key]
+    return basket_items(load_table(spark, sf_dir, "lineitem"))
 
 
 def _q_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4422,13 +4374,13 @@ def _q_lsh_recall(spark, sf_dir):
 
     return lsh_recall(
         load_table(spark, sf_dir, "documents"),
+        threshold=LSH_GATE_THRESHOLD,
         shingles=_shared_shingles(spark, sf_dir),
-        # exact side: the shared AllPairs table (threshold 0.45) sliced
-        # to this gate's threshold — the exact pair set at 0.5 is the
-        # jaccard >= 0.5 slice of the 0.45 set (same integers, same
-        # IEEE division), pinned by test_shared_stages
+        # exact side: the shared AllPairs table sliced to this gate's
+        # threshold (see ALLPAIRS_STAGE_THRESHOLD), pinned by
+        # test_shared_stages
         exact_pairs=_shared_allpairs_pairs(spark, sf_dir)
-        .filter(F.col("jaccard") >= 0.5)
+        .filter(F.col("jaccard") >= LSH_GATE_THRESHOLD)
         .select("doc_a", "doc_b"),
         bands=_shared_minhash_bands(spark, sf_dir),
     )
@@ -4808,25 +4760,6 @@ def _q_blocking_quality(spark, sf_dir):
     )
 
 
-def _shared_trade_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized two-hop reach stage over the trade graph (the
-    link-pairs device): ``two_hop`` surfaces it as-is and
-    ``harmonic`` derives H₂ from the same counts — one execution of
-    the reach expansion per suite run."""
-    _memo_scope(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "trade_reach")
-    if key not in _DEDUP_STAGE_MEMO:
-        from p2_mapreduce_spark.operators.graph import trade_two_hop
-
-        reach = trade_two_hop(
-            load_table(spark, sf_dir, "lineitem"),
-            load_table(spark, sf_dir, "orders"),
-            pairs=_shared_trade_pairs(spark, sf_dir).select("cust", "supp"),
-        )
-        _DEDUP_STAGE_MEMO[key] = reach.localCheckpoint()
-    return _DEDUP_STAGE_MEMO[key]
-
-
 def _q_durbin_watson(spark, sf_dir):
     """Durbin–Watson serial-correlation statistic of the global daily
     revenue series (Σdiff²/Σdev², exact moments)."""
@@ -5057,196 +4990,34 @@ _DRIVER_CHECKED_R01_R08 = frozenset(
 )
 
 
-#: Queries added THIS round (never existed when any driver sample ran) —
-#: registered first so the newest, highest-risk operators are always
-#: inside the driver's 50-query window.  ROUND 9 IS A CONSOLIDATION
-#: ROUND (r08 verdict item 1): new+changed ids are capped at ~15 so
-#: ≥35 of the driver's 50 slots go to the 149 ids never externally
-#: sampled through r08.
-_ROUND9_NEW = (
-    # first container video codec: MJPEG-in-AVI (r08 verdict item 4)
-    # + the multiplexed two-stream (MJPEG video + PCM audio) demux
-    "video_avi_mjpeg", "avi_demux_av",
-    # financial/momentum day-grid batch (exact-cent frames)
-    "max_drawdown", "bollinger_bands", "ma_crossover", "obv_daily",
-    "capm_beta",
-    # ordered-alternative rank test (value-grid fold, no pairwise join)
-    "jonckheere",
-    # survival + reliability/agreement completions
-    "nelson_aalen", "icc_reliability", "krippendorff",
-    # directed-graph symmetry audit
-    "reciprocity",
-    # Hilbert-curve layout audit (the other space-filling curve)
-    "hilbert_cluster",
-)
-
-#: Queries whose implementation or oracle materially CHANGED this round
-#: (r04 ADVICE: a prior driver check validated the OLD code, so changed
-#: ids re-enter the sample window exactly like new ids).
-_ROUND9_CHANGED = (
-    # dup_edge_support — naive symmetric wedge self-join replaced by the
-    # degree-ordered orientation (r08 verdict item 2); values identical
-    # (parity pytest + contract re-check green), plan changed
-    "dup_edge_support",
-    # --- optimization round (r09): shared-stage refactors — values
-    # identical (full contract re-sweep green at both scales), plans
-    # changed, so every consumer re-enters the driver sample window ---
-    # trade-graph family now consumes the memoized trade_pairs stage
-    "pagerank_trade", "bfs_trade", "sssp_trade", "ppr_trade",
-    "hits_trade", "degree_assort", "rich_club", "graph_modularity",
-    "degree_histogram", "two_hop", "harmonic",
-    # co-supply family now consumes the memoized distinct pair dictionary
-    "triangle_census", "triangle_doulion", "k_core",
-    # basket family now consumes the memoized basket_items stage
-    "assoc_rules", "copurchase", "item_cosine", "clustering_coeff",
-    # dedup family now consumes the memoized hashed-shingle stage /
-    # the memoized exact truth-pair stage
-    "dedup_ngram", "dedup_allpairs", "dedup_minhash", "lsh_recall",
-    "blocking_quality", "dedup_incremental",
-    # media kernels: per-plane pixel fold rewritten sum(genexpr) ->
-    # sum(map(sum, rows)) (3x faster per plane, bit-identical integer
-    # sums — values re-verified vs oracle)
-    "video_frames", "media_jpeg", "media_jpeg420",
-    "media_jpeg_prog_color", "media_decode", "media_mixed",
-    "media_frames",
-    # markov_attribution — the 12-round join-per-round fixed point
-    # folded into one JVM higher-order aggregate expression (same
-    # bigint arithmetic, value-identical; re-proved vs the unrolled
-    # oracle at both scales), removing all iteration barriers
-    "markov_attribution",
-    # embedding family — spread() added at the corpus-scan sites of
-    # knn_bruteforce / cosine_near_pairs / gram_matrix / pq_encode /
-    # knn_lsh / knn_lsh_multiprobe (the 2000-row embeddings table is
-    # ONE parquet split, so every interpreted-HOF dot product ran on
-    # one core until the first exchange; spread is a no-op at scale).
-    # Values partition-invariant by the operators' exact protocols;
-    # all 12 consumers re-proved hash-identical at both scales
-    "gram_matrix", "knn_embeddings", "knn_lsh", "knn_multiprobe",
-    "ann_recall", "mrl_recall", "embed_near_pairs", "pq_encode",
-    "pq_search", "ivf_pq_search", "ivf_pq_recall", "hybrid_rrf",
-    # simhash_fps shared stage — the md5 fingerprint table is
-    # materialized once and fed to both consumers (values identical;
-    # parity pytest + both-scale oracle re-check green)
-    "dedup_simhash", "blocking_quality",
-    # attach_avi_av now builds payloads once per doc_id residue class
-    # (period lcm(1400, n_frames_max)) and broadcast-joins them back —
-    # bytes identical (differential pytest over multiple periods +
-    # both-scale oracle re-check)
-    "avi_demux_av",
-)
-
-#: --- round-10 (optimization round 2): every id whose PLAN or KERNEL
-#: changed this round re-enters the driver sample window; values proved
-#: identical (full contract sweeps at both scales, see
-#: OPTIMIZATION_r10.md) ---
-_ROUND10_CHANGED = (
-    # ADVICE hardening: NULL-doc_id residue guard (plan gains the
-    # zero-row sequential branch) / try_element_at markov fold
-    "avi_demux_av", "markov_attribution",
-    # SimHash/MinHash single-expression builders (same Catalyst plan,
-    # ~300-400 py4j trips -> ~3 per call) + DHT-memo eviction (JPEG
-    # kernel-internal, bit-identical)
-    "dedup_minhash", "dedup_incremental", "lsh_recall", "dedup_simhash",
-    "dedup_simhash_idf", "blocking_quality",
-    "media_jpeg", "media_jpeg420", "media_jpeg420_prog",
+#: Query ids that are new or whose plan, kernel or oracle changed since
+#: they were last sampled (a prior check validated the OLD code, so
+#: changed ids re-enter the sample window like new ids).  ``queries()``
+#: registers these first, in this order, so the highest-risk operators
+#: are always inside the first-50 sample window.
+RECENTLY_CHANGED = (
+    # plan or kernel changed
+    "avi_demux_av", "markov_attribution", "dedup_minhash",
+    "dedup_incremental", "lsh_recall", "dedup_simhash", "dedup_simhash_idf",
+    "blocking_quality", "media_jpeg", "media_jpeg420", "media_jpeg420_prog",
     "media_jpeg_prog", "media_jpeg_prog_color", "media_jpeg_prog_dri",
     "media_mixed", "media_decode", "media_frames", "video_avi_mjpeg",
-    # containment miner + novelty attribution now consume the shared
-    # hashed-shingle stage (plan: explode subtree -> checkpoint scan)
-    "dedup_containment", "doc_novelty",
-    # dedup_allpairs IS the family's shared AllPairs stage; lsh_recall's
-    # exact side reads its jaccard>=0.5 slice and its approximate side
-    # consumes the shared MinHash band table
-    "dedup_allpairs",
-    # SimHash vote regroup to distinct (doc, token) grain — same exact
-    # BIGINT sums (brute-force twin pytest), pair-grain join/aggregate
-    # inputs instead of the occurrence stream
-    # (dedup_simhash / dedup_simhash_idf / blocking_quality already
-    # listed above)
-    # winnow_fingerprints IS the MOSS family's shared selection stage;
-    # winnow_pairs self-joins its distinct (doc_id, fp) projection
-    "winnow_fingerprints", "winnow_pairs",
-    # the two link-prediction rankings consume ONE memoized wedge-count
-    # stage over the shared panel incidence
-    "link_prediction", "link_jaccard",
-    # the ngram truth-pair memo now derives from the shared UNFILTERED
-    # shingle_pairs table (dedup_containment reads the same table with
-    # its own predicate — both listed above / here)
-    "dedup_ngram",
-    # dense-census bitset assembly rewritten to native bit_or
-    # aggregates (values pinned identical; plan changed)
-    "triangle_census",
-)
-
-#: --- round-8 history (all 34 new + 3 changed ids were sampled in the
-#: r08 driver window and are now in _DRIVER_CHECKED_R01_R08) ---
-_ROUND8_NEW = (
-    # IVF-PQ composed retrieval + its recall acceptance gate (r07
-    # verdict missing #3 / next-round item 4)
-    "ivf_pq_search", "ivf_pq_recall",
-    # round-8 stats-test batch (distribution shape / scale / location /
-    # trend / partialled and ordinal association)
-    "jarque_bera", "levene_bf", "mood_median", "cochran_armitage",
-    "partial_corr", "ordinal_assoc",
-    # round-8 time-series batch (autoregression, seasonal score, lead
-    # tests, momentum indicators, sequential monitoring)
-    "ar1_forecast", "seasonal_strength", "granger_lag1", "rsi_daily",
-    "price_osc", "sprt_daily",
-    # round-8 graph / drift / dedup-ops batch
-    "hits_trade", "hellinger_drift", "stuart_maxwell",
-    "squared_rank_scale", "dup_roi", "staleness_audit",
-    # round-8 rank/trend/outlier completion batch
-    "ansari_bradley", "wilcoxon_signed", "page_trend", "cox_stuart",
-    "dixon_q",
-    # round-8 graph-composition batch
-    "textrank", "dup_edge_support",
-    # round-8 media plane: 4th/5th still formats (tag-directory TIFF,
-    # ASCII-grammar PGM) + the ML-prep feature screen
-    "media_tiff", "media_pgm", "stump_gini",
-    # round-8 reliability / method-comparison batch
-    "cronbach_alpha", "lins_ccc", "bland_altman",
-    # round-8 epidemiology-trio completion
-    "risk_ratio",
-)
-
-_ROUND8_CHANGED = (
-    # range_join — BNLJ replaced by the docstring'd bucketized-band
-    # equi-join (r07 verdict weak #2 / next-round item 3)
-    "range_join",
-    # pq_encode / pq_search — sub-codebook construction extracted into
-    # the shared _pq_codebook helper (same plan, but the code moved, so
-    # they re-enter the window; both were never-sampled anyway)
-    "pq_encode", "pq_search",
-)
-
-#: --- round-7 history (all 28 new + 8 changed ids were sampled in the
-#: r07 driver window and are now in _DRIVER_CHECKED_R01_R08) ---
-_ROUND7_NEW = (
-    "audio_flac_lpc", "audio_mp1", "audio_g711", "media_bmp_rle",
-    "media_gif",
-    "durbin_watson", "pettitt", "tsb", "page_hinkley", "friedman",
-    "hhi", "kendall_w", "bday_lag", "cliffs_delta", "null_cooccur",
-    "cohens_d", "mcnemar", "odds_ratio", "burstiness", "harmonic",
-    "ljung_box", "seasonal_mk", "cochran_q", "price_index",
-    "theta", "fleiss_kappa", "video_y4m", "binary_seg",
-)
-
-#: Queries whose implementation or oracle materially CHANGED this round
-#: (r04 ADVICE: a prior driver check validated the OLD code, so changed
-#: ids re-enter the sample window exactly like new ids):
-#:   two_hop — absolute hash-ranked top-K node panel replaces the
-#:     fractional node%100 sample (r06 verdict weak #1, the
-#:     link_prediction fix applied), now answered from the memoized
-#:     shared reach stage;
-#:   link_prediction / link_jaccard — both consume the memoized shared
-#:     (s, c) incidence stage (r06 verdict item 5);
-#:   kruskal_wallis / anova_f / ccf_daily / rbo_ranks — empty-input /
-#:     single-group guards (r06 ADVICE);
-#:   audio_flac — the shared _decode_flac grew LPC + stereo
-#:     decorrelation; the fixed-subset query re-validates the decoder.
-_ROUND7_CHANGED = (
-    "two_hop", "link_prediction", "link_jaccard", "kruskal_wallis",
-    "anova_f", "ccf_daily", "rbo_ranks", "audio_flac",
+    "dedup_containment", "doc_novelty", "dedup_allpairs",
+    "winnow_fingerprints", "winnow_pairs", "link_prediction", "link_jaccard",
+    "dedup_ngram", "triangle_census",
+    # new operators
+    "max_drawdown", "bollinger_bands", "ma_crossover", "obv_daily",
+    "capm_beta", "jonckheere", "nelson_aalen", "icc_reliability",
+    "krippendorff", "reciprocity", "hilbert_cluster",
+    # plan or kernel changed
+    "dup_edge_support", "pagerank_trade", "bfs_trade", "sssp_trade",
+    "ppr_trade", "hits_trade", "degree_assort", "rich_club",
+    "graph_modularity", "degree_histogram", "two_hop", "harmonic",
+    "triangle_doulion", "k_core", "assoc_rules", "copurchase",
+    "item_cosine", "clustering_coeff", "video_frames", "gram_matrix",
+    "knn_embeddings", "knn_lsh", "knn_multiprobe", "ann_recall",
+    "mrl_recall", "embed_near_pairs", "pq_encode", "pq_search",
+    "ivf_pq_search", "ivf_pq_recall", "hybrid_rrf",
 )
 
 
@@ -5255,11 +5026,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     for _n in _PLAN_PURE_IDS:
         if _n in base:
             base[_n] = _plan_memoized(_n, base[_n])
-    newest = {
-        k: base[k]
-        for k in (*_ROUND10_CHANGED, *_ROUND9_NEW, *_ROUND9_CHANGED)
-        if k in base
-    }
+    newest = {k: base[k] for k in RECENTLY_CHANGED if k in base}
     fresh = {
         k: v
         for k, v in base.items()

@@ -375,89 +375,6 @@ def materialize(df) -> None:
     df.sparkSession.catalog.clearCache()
 
 
-#: Query families that consume a memoized shared stage
-#: (__spark_entry__._DEDUP_STAGE_MEMO): within each family the FIRST
-#: query to run pays the one-off stage materialization for the whole
-#: family (ADVICE r04: make the payer visible so per-query
-#: round-over-round comparisons aren't misread).  With min-of-2 timing
-#: the recorded value sheds most of that one-off cost — the raw first
-#: sample in "queries_raw" retains it.
-_SHARED_STAGE_FAMILIES = {
-    # exact n-gram-Jaccard pair list + closure (dedup family)
-    "dedup_closure": (
-        "dup_clusters",
-        "dup_clusters_star",
-        "golden_record",
-        "dup_matrix",
-        # round-8 consumers of the same memoized pair stage
-        "dup_roi",
-        "dup_edge_support",
-        # round-9 optimization: dedup_ngram IS the shared truth-pair
-        # stage (it now surfaces the memo) and blocking_quality grades
-        # its blocking against it
-        "dedup_ngram",
-        "blocking_quality",
-    ),
-    # panel-filtered (s, c) incidence list (link-prediction family,
-    # VERDICT r06 item 5)
-    "link_pairs": ("link_prediction", "link_jaccard"),
-    # (cust_a, cust_b, n_common) wedge-count stage over the panel
-    # incidence (r10): both rankings consume one materialization
-    "link_scored": ("link_prediction", "link_jaccard"),
-    # memoized 2-hop reach stage over the trade graph (VERDICT r07
-    # "What's wrong" #1: two_hop records ~0.015 s in-suite because
-    # harmonic already paid the shared reach materialization — name the
-    # payer so the suite number isn't misread as the operator cost)
-    "trade_reach": ("two_hop", "harmonic"),
-    # --- round-9 optimization: four new shared stages (same memo
-    # discipline; the FIRST family member in suite order pays the
-    # localCheckpoint materialization in its raw first sample) ---
-    # distinct (cust, supp, min-ship-lag) trading-pair dictionary
-    "trade_pairs": (
-        "pagerank_trade", "bfs_trade", "sssp_trade", "ppr_trade",
-        "hits_trade", "degree_assort", "rich_club", "graph_modularity",
-        "reciprocity", "degree_histogram", "two_hop", "harmonic",
-    ),
-    # distinct supplier co-supply edge dictionary
-    "cosupply_pairs": ("triangle_census", "triangle_doulion", "k_core"),
-    # md5-60 SimHash fingerprint table (doc, simhash) — round-9: the
-    # near-pair finder and the blocking audit consume one
-    # materialization
-    "simhash_fps": ("dedup_simhash", "blocking_quality"),
-    # distinct (order, part) basket membership table
-    "basket_items": (
-        "assoc_rules", "copurchase", "item_cosine", "clustering_coeff",
-    ),
-    # (doc, h) hashed-shingle table (n=3) under every shingle-set path
-    "shingles": (
-        "dedup_ngram", "dedup_allpairs", "dedup_minhash", "lsh_recall",
-        "blocking_quality", "dedup_incremental", "dup_clusters",
-        "dup_clusters_star", "golden_record", "dup_matrix", "dup_roi",
-        "dup_edge_support",
-        # round-10: the containment miner and the novelty attribution
-        # open with the identical (doc, h) table — joined to the family
-        "dedup_containment", "doc_novelty",
-    ),
-    # MinHash band index (64×16) over the shared shingles (r10:
-    # lsh_recall's approximate side consumes it too)
-    "minhash_bands": ("dedup_minhash", "dedup_incremental", "lsh_recall"),
-    # exact AllPairs pair table at threshold 0.45 (r10): the honesty
-    # gate's exact side is the jaccard>=0.5 slice of the same table
-    "allpairs_pairs": ("dedup_allpairs", "lsh_recall"),
-    # winnowing fingerprint selection (r10): the MOSS selection face
-    # surfaces it, the pair face self-joins it
-    "winnow_fps": ("winnow_fingerprints", "winnow_pairs"),
-    # UNFILTERED shingle_pairs table (r10): the Jaccard truth-pair
-    # stage and the containment miner differ only in the final
-    # predicate — whoever runs first pays the inverted-index join
-    "raw_pairs": (
-        "dedup_ngram", "dedup_containment", "dup_clusters",
-        "dup_clusters_star", "golden_record", "dup_matrix", "dup_roi",
-        "dup_edge_support", "blocking_quality", "lsh_recall",
-    ),
-}
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -600,9 +517,16 @@ def main() -> None:
     timings: dict[str, float] = {}
     raw: dict[str, float] = {}
     resampled: dict[str, list[float]] = {}
+    # shared stage -> the query whose raw first sample built it (new
+    # __spark_entry__._DEDUP_STAGE_MEMO keys; min-of-2 sheds the one-off
+    # localCheckpoint cost from "queries", the raw sample retains it)
+    shared_payers: dict[str, str] = {}
     try:
         for name in names:
+            before = set(contract._DEDUP_STAGE_MEMO)
             t1 = timed(name)
+            for key in set(contract._DEDUP_STAGE_MEMO) - before:
+                shared_payers.setdefault(key[2], name)
             raw[name] = t1
             t2 = timed(name)
             t = min(t1, t2)
@@ -629,10 +553,6 @@ def main() -> None:
     finally:
         _DF.persist = orig_persist
     total = round(sum(timings.values()), 3)
-    shared_payers = {
-        fam: next((n for n in names if n in members), None)
-        for fam, members in _SHARED_STAGE_FAMILIES.items()
-    }
     compact = json.dumps(
         {
             "metric": "headline_suite_seconds",
@@ -650,10 +570,7 @@ def main() -> None:
             "queries": timings,
             "queries_raw": raw,
             "sf": float(sf),
-            # each shared-stage family's named query paid the one-off
-            # localCheckpoint materialization in its RAW first sample
-            # (min-of-2 sheds it from "queries")
-            "shared_stage_payers": shared_payers,
+            "shared_stage_payers": dict(sorted(shared_payers.items())),
             # queries whose recorded time exceeded 2x the previous
             # round's and were re-measured at end of suite (noise
             # sentinel): [recorded_before, resample]; the min stands

@@ -108,6 +108,23 @@ def spread(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
     return df.repartition(target)
 
 
+def memo_get(memo: dict, scope: tuple, rest: tuple, build):
+    """Return ``memo[scope + rest]``, calling ``build()`` on a miss.
+
+    A miss first drops every entry whose key does not start with
+    ``scope`` (a dead application, or another scale factor when the
+    scope includes ``sf_dir``), so the objects those entries held become
+    unreferenced and Spark's ContextCleaner reclaims their blocks
+    instead of accumulating them for the process lifetime."""
+    key = scope + rest
+    hit = memo.get(key)
+    if hit is None:
+        for k in [k for k in memo if k[: len(scope)] != scope]:
+            del memo[k]
+        hit = memo[key] = build()
+    return hit
+
+
 #: DataFrame memo per (application, sf_dir, table).  A DataFrame is an
 #: immutable logical plan; rebuilding it per query re-runs file listing
 #: and parquet footer/schema reads (InMemoryFileIndex construction —
@@ -131,16 +148,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     integer division — float division of ns-epochs (~1.7e18 > 2^53)
     silently drifts by ±1 µs.
     """
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        name,
+    return memo_get(
+        _TABLE_MEMO,
+        (spark.sparkContext.applicationId,),
+        (os.path.abspath(sf_dir), name),
+        lambda: _scan_table(spark, sf_dir, name),
     )
-    hit = _TABLE_MEMO.get(key)
-    if hit is not None:
-        return hit
-    for k in [k for k in _TABLE_MEMO if k[0] != key[0]]:
-        del _TABLE_MEMO[k]  # dead application: drop its plan objects
+
+
+def _scan_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         from pyspark.sql import functions as F
@@ -151,7 +167,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     else:
         df = spark.read.parquet(path)
-    _TABLE_MEMO[key] = df
     return df
 
 
