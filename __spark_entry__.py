@@ -4997,6 +4997,7 @@ _DRIVER_CHECKED_R01_R08 = frozenset(
 #: are always inside the first-50 sample window.
 RECENTLY_CHANGED = (
     # plan or kernel changed
+    "golden_record", "dup_clusters", "dup_cluster_sizes",
     "avi_demux_av", "markov_attribution", "dedup_minhash",
     "dedup_incremental", "lsh_recall", "dedup_simhash", "dedup_simhash_idf",
     "blocking_quality", "media_jpeg", "media_jpeg420", "media_jpeg420_prog",

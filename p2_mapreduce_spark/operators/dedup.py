@@ -73,8 +73,11 @@ def shingle_pairs(
     (effectively) injective hash, the self-join key narrows from a
     ~20-byte string to 8 bytes, and equality comparisons in the join are
     long==long.  The table feeds the sizes aggregate and BOTH sides of
-    the self-join, so it is persisted rather than recomputed three
-    times (at 100 TB: checkpoint instead; plan shape unchanged).
+    the self-join, so a shingle table built here is persisted rather
+    than recomputed three times (at 100 TB: checkpoint instead; plan
+    shape unchanged).  A pre-built ``shingles`` table is already
+    materialized: nothing is persisted then, since a DataFrame cache
+    entry made here would outlive the call.
 
     ``max_df`` drops shingles appearing in more than that many documents
     before the self-join (see :data:`MAX_DF`): Jaccard is then computed
@@ -84,12 +87,9 @@ def shingle_pairs(
     # — otherwise the explode pipeline (the dominant stage) runs once for
     # the frequency aggregate and again for the join's probe side; a
     # pre-built ``shingles`` table (the dedup family's shared stage) is
-    # already materialized and skips both the explode and the persist
-    base = (
-        shingles
-        if shingles is not None
-        else hashed_shingles(docs, n, text_col, id_col).persist()
-    )
+    # already materialized and skips the explode and both persists
+    solo = shingles is None
+    base = hashed_shingles(docs, n, text_col, id_col).persist() if solo else shingles
     sh = base
     if max_df is not None:
         # the HOT set (df > cap) is tiny by construction — total/cap at
@@ -101,7 +101,9 @@ def shingle_pairs(
             .filter(F.col("df") > max_df)
             .select("h")
         )
-        sh = base.join(F.broadcast(hot), "h", "left_anti").persist()
+        sh = base.join(F.broadcast(hot), "h", "left_anti")
+        if solo:
+            sh = sh.persist()
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_shingles"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -1142,11 +1144,13 @@ def golden_record(
 
     Composition of audited parts: exact n-gram pairs
     (:func:`ngram_jaccard_pairs`) → label-propagation closure
-    (``graph.dup_clusters``) → cluster-grain survivorship (one MAX
-    aggregate + an equi-join back on (cluster, max) + MIN tie-break —
-    never a window over the corpus).  Sources surface as a
-    ``,``-joined sorted string, not an array (scalar-column output
-    contract).
+    (``graph.dup_clusters``) → cluster-grain survivorship in ONE
+    aggregate — the survivor is the MIN of ``(-n_chars, doc_id)``
+    structs next to the size and provenance columns, never a join back
+    or a window over the corpus.  A member with NULL ``n_chars`` never
+    survives, and a cluster whose members all have NULL ``n_chars``
+    yields no row.  Sources surface as a ``,``-joined sorted string,
+    not an array (scalar-column output contract).
 
     Shape at 100 TB: survivorship work is cluster-grain; the dominant
     cost is the upstream pair generation, already bucketed/df-capped —
@@ -1169,29 +1173,30 @@ def golden_record(
         ),
         "doc_id",
     )
-    per = member.groupBy("cluster").agg(
-        F.max("cluster_size").cast("bigint").alias("cluster_size"),
-        F.max("n_chars").cast("bigint").alias("canonical_chars"),
-        F.array_join(F.sort_array(F.collect_set("source")), ",").alias(
-            "sources"
-        ),
-    )
-    canon = (
-        member.join(
-            per.select("cluster", "canonical_chars"),
-            ["cluster"],
+    survivor = F.min(
+        F.when(
+            F.col("n_chars").isNotNull(),
+            F.struct(
+                (-F.col("n_chars").cast("bigint")).alias("neg_chars"),
+                F.col("doc_id").cast("bigint").alias("doc_id"),
+            ),
         )
-        .filter(F.col("n_chars") == F.col("canonical_chars"))
-        .groupBy("cluster")
-        .agg(F.min("doc_id").cast("bigint").alias("canonical_id"))
     )
     return (
-        per.join(canon, "cluster")
+        member.groupBy("cluster")
+        .agg(
+            F.max("cluster_size").cast("bigint").alias("cluster_size"),
+            F.array_join(F.sort_array(F.collect_set("source")), ",").alias(
+                "sources"
+            ),
+            survivor.alias("survivor"),
+        )
+        .where(F.col("survivor").isNotNull())
         .select(
             "cluster",
             "cluster_size",
-            "canonical_id",
-            "canonical_chars",
+            F.col("survivor.doc_id").alias("canonical_id"),
+            (-F.col("survivor.neg_chars")).alias("canonical_chars"),
             (F.col("cluster_size") - 1).cast("bigint").alias("n_dropped"),
             "sources",
         )

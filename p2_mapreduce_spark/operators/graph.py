@@ -22,8 +22,10 @@ Scale design:
   iterative op here takes ``checkpoint_dir``: set it (HDFS/object store)
   for reliable ``checkpoint()`` that survives executor loss on a real
   cluster; unset, ``localCheckpoint()`` is the single-node default.
-- The convergence probe is a ``limit(1).count()`` on changed labels — an
-  O(1)-result job, not a collect of the label table.
+- The convergence probe is an edge-consistency check — any edge whose
+  two endpoints carry different labels — run as one ``limit(1).count()``
+  BEFORE each round: an O(1)-result job, not a collect of the label
+  table, and a labelling that is already final costs no extra round.
 """
 
 from __future__ import annotations
@@ -55,7 +57,20 @@ def connected_components(
     """(v, component) for every vertex in ``edges``; ``component`` is the
     minimum vertex id reachable from v — a deterministic canonical label
     under ANY partitioning/iteration interleaving, since min is
-    order-independent."""
+    order-independent.
+
+    The seed labels already have one propagation round applied (each
+    vertex takes the min of itself and its neighbours), and each later
+    round is preceded by a consistency probe: one ``limit(1).count()``
+    for an edge whose endpoints disagree.  A consistent labelling is
+    final.  Labels only ever hold ids of vertices in the vertex's own
+    component and never increase, so every label is ≤ its vertex id and
+    ≥ its component's min id; if no edge disagrees, each component
+    carries one label, which must therefore be the component's min id.
+    A component whose vertices are all adjacent to its min id (a
+    clique — the usual near-duplicate group) is consistent after the
+    seed, so near-duplicate graphs mostly finish with no propagation
+    round at all.  ``max_iter`` bounds the rounds, the seed included."""
     ckpt = _make_ckpt(edges.sparkSession, checkpoint_dir)
     # Materialize the symmetrized edge list ONCE: the upstream edge plan
     # (e.g. the whole ngram-similarity pipeline) would otherwise re-execute
@@ -64,25 +79,26 @@ def connected_components(
         edges.select(F.col(dst).alias("u"), F.col(src).alias("w"))
     ))
     labels = ckpt(
-        sym.select(F.col("u").alias("v")).distinct().select("v", F.col("v").alias("component"))
+        sym.groupBy("u")
+        .agg(F.least(F.min("w"), F.col("u")).alias("component"))
+        .select(F.col("u").alias("v"), "component")
     )
-    for _ in range(max_iter):
-        nbr = sym.join(labels, sym.u == labels.v).select(
-            F.col("w").alias("v"), "component"
-        )
-        new_labels = ckpt(
-            labels.union(nbr).groupBy("v").agg(F.min("component").alias("component"))
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "v")
-            .where(F.col("n.component") != F.col("o.component"))
+    for _ in range(max_iter - 1):
+        inconsistent = (
+            sym.join(labels.select(F.col("v").alias("u"), F.col("component").alias("cu")), "u")
+            .join(labels.select(F.col("v").alias("w"), F.col("component").alias("cw")), "w")
+            .where(F.col("cu") != F.col("cw"))
             .limit(1)
             .count()
         )
-        labels = new_labels
-        if changed == 0:
+        if inconsistent == 0:
             break
+        nbr = sym.join(labels, sym.u == labels.v).select(
+            F.col("w").alias("v"), "component"
+        )
+        labels = ckpt(
+            labels.union(nbr).groupBy("v").agg(F.min("component").alias("component"))
+        )
     return labels
 
 

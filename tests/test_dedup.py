@@ -441,3 +441,68 @@ class TestWeightedSimhash:
         u = {r["doc"]: r["simhash"]
              for r in simhash_fingerprints(docs, hash_fn="md5").collect()}
         assert w == u
+
+
+def test_shingle_pairs_over_materialized_shingles_caches_nothing(spark, docs):
+    """A pre-built ``shingles`` table is already materialized, so the
+    pair build must not register a DataFrame cache entry of its own —
+    one would outlive the call, one per shared-stage build."""
+    from p2_mapreduce_spark.operators.dedup import hashed_shingles
+
+    sh = hashed_shingles(docs, 3).localCheckpoint()
+    spark.catalog.clearCache()
+    shingle_pairs(docs, shingles=sh).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_golden_record_null_n_chars_never_survives(spark, tmp_path):
+    """NULL ``n_chars`` never wins survivorship, and a cluster whose
+    members all have NULL ``n_chars`` yields no row — on the operator,
+    on its shared-clusters form, and on the DuckDB oracle alike."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry_mod
+    from p2_mapreduce_spark.operators.dedup import golden_record
+    from p2_mapreduce_spark.operators.graph import dup_clusters
+    from tests.oracle_harness import assert_oracle_match
+
+    a = "alpha beta gamma delta epsilon zeta eta theta"
+    b = "one two three four five six seven eight"
+    rows = [
+        # cluster 1: doc 1 has the smallest id and NULL n_chars
+        (1, a + " iota", "en", "srcB", None),
+        (2, a, "en", "srcA", 40),
+        (3, a + " kappa", "en", "srcC", 45),
+        # cluster 10: every member NULL -> no survivor, no row
+        (10, b, "en", "srcA", None),
+        (11, b + " nine", "en", "srcD", None),
+        (20, "totally different words here nothing shared at all", "en",
+         "srcZ", 51),
+    ]
+    cols = ["doc_id", "text", "lang", "source", "n_chars"]
+    table = pa.table(
+        {c: [r[i] for r in rows] for i, c in enumerate(cols)},
+        schema=pa.schema([
+            ("doc_id", pa.int64()), ("text", pa.string()),
+            ("lang", pa.string()), ("source", pa.string()),
+            ("n_chars", pa.int64()),
+        ]),
+    )
+    pq.write_table(table, str(tmp_path / "documents.parquet"))
+    docs = spark.read.parquet(str(tmp_path / "documents.parquet"))
+
+    solo = golden_record(docs)
+    shared = golden_record(
+        docs,
+        clusters=dup_clusters(ngram_jaccard_pairs(docs).select("doc_a", "doc_b")),
+    )
+    got = [r.asDict() for r in solo.collect()]
+    assert got == [{
+        "cluster": 1, "cluster_size": 3, "canonical_id": 3,
+        "canonical_chars": 45, "n_dropped": 2, "sources": "srcA,srcB,srcC",
+    }]
+    assert [r.asDict() for r in shared.collect()] == got
+    sql = entry_mod.oracle_sql()["golden_record"]
+    assert_oracle_match(solo, sql, str(tmp_path), "golden_record")
+    assert_oracle_match(shared, sql, str(tmp_path), "golden_record")

@@ -26,6 +26,24 @@ def test_chain_converges_to_min_label(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1}
 
 
+def test_near_dup_graph_stops_after_seed(spark, monkeypatch):
+    """Diameter-1 components are final once the seed labels are built:
+    one checkpoint for the symmetrized edges, one for the seed, then the
+    consistency probe finds nothing and no propagation round runs."""
+    frame = type(spark.range(1))  # the concrete (classic) DataFrame class
+    calls = []
+    real = frame.localCheckpoint
+
+    def counting(self, *args, **kwargs):
+        calls.append(1)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame, "localCheckpoint", counting)
+    got = _cc(spark, [(1, 2), (3, 4), (5, 6)])
+    assert got == {1: 1, 2: 1, 3: 3, 4: 3, 5: 5, 6: 5}
+    assert len(calls) == 2
+
+
 def test_two_components_and_direction_independence(spark):
     # labels must not depend on edge direction (10,9) vs (9,10)
     got = _cc(spark, [(10, 9), (9, 8), (1, 2), (2, 1)])
